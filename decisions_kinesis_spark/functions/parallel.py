@@ -20,32 +20,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
-    """Eagerly localCheckpoint several INDEPENDENT frames with their
-    jobs overlapped (guide §2.6): one frame's straggler tail back-fills
-    with the next frame's tasks instead of serializing whole jobs.
-    Values are identical to sequential checkpoints — only job overlap
-    changes.  Callers must pass frames with no data dependency on each
-    other."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    if not dfs:
-        return []
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
-    wrap = inheritable_thread_target(dfs[0].sparkSession)
-    if not callable(wrap):  # classic mode (PYSPARK_PIN_THREAD=false):
-        wrap = lambda f: f  # the session form returns the session itself
-    with ThreadPoolExecutor(max_workers=min(len(dfs), 4)) as pool:
-        futures = [
-            pool.submit(wrap(lambda d=d: d.localCheckpoint(eager=True)))
-            for d in dfs
-        ]
-        return [f.result() for f in futures]
-
-
 def repartition_for_python(df: DataFrame, *cols: str) -> DataFrame:
     """Keyed repartition sized for a PYTHON-COMPUTE-BOUND stage.
 

@@ -72,9 +72,11 @@ def _quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: one (spark, sf_dir) loop result within a sweep instead of re-running
 #: the 3-iteration crossJoin+checkpoint chain three times.  Keyed on
 #: applicationId so a restarted SparkContext can never serve stale
-#: checkpointed frames; bounded to ONE entry so the retained
+#: checkpointed frames; bounded to ONE (app, sf_dir) so the retained
 #: localCheckpoint blocks (the session-aging lesson) stay a single
-#: bounded set rather than accumulating across sf_dirs.
+#: bounded set rather than accumulating across sf_dirs.  Beside the loop
+#: result it holds ch_index's checkpointed final centroids under
+#: (app, sf_dir, "cents"), evicted with it.
 _KM_LOOP_CACHE: dict = {}
 
 
@@ -278,9 +280,13 @@ def embedding_kmeans_ch_index(
     """
     _stats, assign, cents, vecs = _kmeans_loop(spark, sf_dir)
     # the final centroid frame is consumed twice below (W's broadcast
-    # join and B) — materialize THIS query's copy once (≤K rows) so the
-    # update aggregation behind it doesn't replay per consumer
-    cents = cents.localCheckpoint(eager=True)
+    # join and B) — materialize it once (≤K rows) so the update
+    # aggregation behind it doesn't replay per consumer, and keep it
+    # beside the loop result so a later call checkpoints nothing
+    ck = (spark.sparkContext.applicationId, sf_dir, "cents")
+    if ck not in _KM_LOOP_CACHE:
+        _KM_LOOP_CACHE[ck] = cents.localCheckpoint(eager=True)
+    cents = _KM_LOOP_CACHE[ck]
     sz = assign.groupBy("cent_id").agg(F.count("*").alias("n"))
     w = (
         assign.drop("dist")

@@ -34,10 +34,7 @@ from decisions_kinesis_spark.operators.textops import (
     _TOKS,
 )
 from decisions_kinesis_spark.functions.ordering import range_prefix
-from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
-    ensure_parallelism,
-)
+from decisions_kinesis_spark.functions.parallel import ensure_parallelism
 from decisions_kinesis_spark.sources.tables import load_table
 
 #: floor-based 4dp round — identical IEEE op sequence in both engines
@@ -71,12 +68,12 @@ def quality_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_toks(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks) tokenized frame — the shared head of every gate
-    pipeline.  The funnel compositions materialize ONE instance of this
-    frame and feed it to all gates (guide §2.4: a lazy subtree replays
-    once per consumer — here the scan + regex split would otherwise run
-    once per gate); standalone gate queries build their own lazily, so
-    their plans and bench numbers are unchanged."""
+    """(doc_id, toks) tokenized frame — the common head of every gate
+    pipeline.  Each gate tokenizes its own input lazily, the funnel
+    compositions included: one materialized toks frame shared by all
+    gates was measured slower, because its build serializes ahead of
+    every gate while the per-gate splits run inside jobs that already
+    overlap (see ``quality_filter_agreement``)."""
     return docs.select("doc_id", F.expr(_TOKS).alias("toks"))
 
 
@@ -84,12 +81,7 @@ def gopher_flags(docs: DataFrame) -> DataFrame:
     """Frame-level Gopher gate over (doc_id, text) — shared by the
     batch query and streaming micro-batch application (one gate
     definition, the ``doc_token_grams`` discipline)."""
-    return _gopher_from_toks(_doc_toks(docs))
-
-
-def _gopher_from_toks(tok: DataFrame) -> DataFrame:
-    """Gopher gate over a pre-tokenized (doc_id, toks) frame."""
-    words = tok.select("doc_id", F.explode("toks").alias("w"))
+    words = _doc_toks(docs).select("doc_id", F.explode("toks").alias("w"))
     wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("cnt"))
     per = wc.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_words"),
@@ -194,12 +186,7 @@ def _rep_runstats(n: int) -> str:
 def repetition_flags(docs: DataFrame) -> DataFrame:
     """Frame-level Gopher repetition gate over (doc_id, text) — shared
     by the batch query and streaming micro-batch application."""
-    return _repetition_from_toks(_doc_toks(docs))
-
-
-def _repetition_from_toks(tok: DataFrame) -> DataFrame:
-    """Repetition gate over a pre-tokenized (doc_id, toks) frame."""
-    toks = tok.filter(F.size("toks") >= 1)
+    toks = _doc_toks(docs).filter(F.size("toks") >= 1)
     widths = (*_REP_TOP, *_REP_DUP)
     out = toks.select(
         "doc_id",
@@ -354,7 +341,7 @@ def lm_interpolated_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same three-consumer shape as lm_bigram_score — materialize once;
     # the unigram-count and per-doc-bigram pipelines are independent,
     # so their jobs overlap (guide §2.6)
-    cnt_tok, doc_tf = checkpoint_parallel(
+    cnt_tok, doc_tf = stage_cache.checkpoint(
         cnt_tok_lazy,
         bi.groupBy("doc_id", "gb", "gu", "gv").agg(F.count("*").alias("tf")),
     )
@@ -659,12 +646,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     array.
     """
     docs = ensure_parallelism(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
-    return _substring_from_toks(_doc_toks(docs))
-
-
-def _substring_from_toks(tok: DataFrame) -> DataFrame:
-    """Exact-substring dedup over a pre-tokenized (doc_id, toks) frame."""
-    toks = tok.filter(F.size("toks") >= _SUBSTR_N)
+    toks = _doc_toks(docs).filter(F.size("toks") >= _SUBSTR_N)
     grams = toks.select(
         "doc_id",
         F.posexplode(
@@ -1168,12 +1150,7 @@ def doc_token_grams(docs: DataFrame) -> DataFrame:
     The tokenize→window→hash chain is scan-side per-row compute; the
     parallelism guard spreads a single-split small input across the
     cluster (no-op at scale — see functions/parallel.py)."""
-    return _grams_from_toks(_doc_toks(ensure_parallelism(docs)))
-
-
-def _grams_from_toks(tok: DataFrame) -> DataFrame:
-    """Hashed fixed-width token grams over a pre-tokenized frame."""
-    toks = tok.filter(F.size("toks") >= _SUBSTR_N)
+    toks = _doc_toks(ensure_parallelism(docs)).filter(F.size("toks") >= _SUBSTR_N)
     return toks.select(
         "doc_id",
         F.explode(
@@ -1487,13 +1464,8 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def classifier_score(docs: DataFrame) -> DataFrame:
     """Frame-level classifier apply over (doc_id, text) — shared by the
     batch query and streaming micro-batch application."""
-    return _classifier_from_toks(_doc_toks(docs))
-
-
-def _classifier_from_toks(tok: DataFrame) -> DataFrame:
-    """Classifier apply over a pre-tokenized (doc_id, toks) frame."""
-    spark = tok.sparkSession
-    words = tok.select("doc_id", F.explode("toks").alias("w"))
+    spark = docs.sparkSession
+    words = _doc_toks(docs).select("doc_id", F.explode("toks").alias("w"))
     feats = words.select(
         "doc_id",
         (F.expr(_BIGHASH.format(e="w")) % _QCLS_BUCKETS).alias("bucket"),

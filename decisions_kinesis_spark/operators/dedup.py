@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from decisions_kinesis_spark.functions.parallel import checkpoint_parallel
+from decisions_kinesis_spark.operators import stage_cache
 from decisions_kinesis_spark.operators.textops import _DUCK_QUALITY, _STOP_SQL
 from decisions_kinesis_spark.sources.tables import load_table
 
@@ -440,7 +440,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # independent shingle pipelines (corpus vs batch) — overlap their
     # materialization jobs (guide §2.6)
-    sh_c, sh_n = checkpoint_parallel(
+    sh_c, sh_n = stage_cache.checkpoint(
         _doc_shingles(corpus), _doc_shingles(batch)
     )
     cand = (
@@ -1035,8 +1035,6 @@ def dedup_cluster_stats(
     pipeline output instead of re-running it; a cache miss runs those
     jobs at DataFrame-construction time (see stage_cache module doc).
     """
-    from decisions_kinesis_spark.operators import stage_cache
-
     comps = stage_cache.get_or_build(
         spark,
         "cluster_stats:components",
@@ -1078,7 +1076,6 @@ def dedup_quality_keeper(
     ``dedup_exact`` shape, no window piling a hot cluster into a
     single partition.
     """
-    from decisions_kinesis_spark.operators import stage_cache
     from decisions_kinesis_spark.operators.textops import with_quality_signals
 
     comps = stage_cache.get_or_build(

@@ -18,10 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
-    ensure_parallelism,
-)
+from decisions_kinesis_spark.functions.parallel import ensure_parallelism
+from decisions_kinesis_spark.operators import stage_cache
 from decisions_kinesis_spark.sources.tables import load_table, table_count
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -1284,7 +1282,6 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     (centered 2.6-5× the budget-matched raw recall at shift 0.5), and
     ``ann_bucket_balance_audit`` measures the matching cost gap.
     """
-    from decisions_kinesis_spark.operators import stage_cache
 
     def _spec(name: str, builder):
         return (
@@ -1482,7 +1479,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hit joins) and the two index frames (read 3× each: both _cands
     # sides + buckets_used) are independent given emb — materialize
     # them with overlapped jobs (guide §2.4/§2.6)
-    truth, cen, raw = checkpoint_parallel(
+    truth, cen, raw = stage_cache.checkpoint(
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", cos)
         .withColumn("rk", F.row_number().over(w_rank))
@@ -1493,7 +1490,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the candidate frames are read 2-3× (budget, top-k, unbudgeted
     # count) — materialize both, overlapped
-    cen_cand, raw_cand = checkpoint_parallel(_cands(cen), _cands(raw))
+    cen_cand, raw_cand = stage_cache.checkpoint(_cands(cen), _cands(raw))
     # per-query scoring budget = the centered index's candidate count
     budget = cen_cand.groupBy("query_id").agg(F.count("*").alias("b"))
     raw_budgeted = (

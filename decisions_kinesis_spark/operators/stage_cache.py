@@ -1,32 +1,34 @@
-"""Session-scoped memo for expensive stage outputs shared by
-composition queries (VERDICT r4 "what's wrong" #1/#2).
+"""The engine's one place that overlaps or memoizes materialization.
 
-Composition queries (``corpus_funnel_report``, ``dedup_cluster_stats``,
-``ann_recall_at_k``) re-run their stage pipelines on every call — the
-single-source-of-truth design keeps one definition per stage, but a
-bench or report session that constructs the same composition twice pays
-the full stage cost each time.  This memo keys a builder's result by
-(applicationId, stage name, dataset key) so repeated constructions in
-one session reuse the materialized stage.
+Three parts, all in this module:
 
-Contract and bounds:
+- **One pool.** ``_overlap`` runs independent thunks on a driver thread
+  pool of width ``_WIDTH`` (guide §2.6 — overlap independent jobs): one
+  job's straggler tail back-fills with the next job's tasks instead of
+  serializing whole jobs.  Pool threads inherit the caller's job group
+  and local properties (``inheritable_thread_target``), so their jobs
+  stay attributable.  ``build_many`` runs its cache misses through it
+  and ``checkpoint`` runs eager ``localCheckpoint``s through it.  Values
+  are identical to running the thunks one after another; only the job
+  overlap changes.
+- **One memo.** ``get_or_build`` keys a builder's result by
+  (applicationId, stage name, dataset key), so a composition query
+  (``corpus_funnel_report``, ``dedup_cluster_stats``,
+  ``ann_recall_at_k``) constructed twice in one session reuses its
+  materialized stages.  Builders materialize their own result
+  (``localCheckpoint(eager=True)``), so a hit is scan-only and a MISS
+  runs Spark jobs at DataFrame-construction time.  Entries of other
+  sessions (different applicationId) are evicted on every access: their
+  checkpoint RDDs died with the session.  The memo is LRU-bounded at
+  ``_MAX_ENTRIES`` pinned frames; ``clear()`` drops everything.
+- **One in-flight set.** ``_BUILDING`` holds the keys whose builder is
+  running.  A second requester of such a key waits on ``_COND`` and
+  then reads the memo; if the builder raised, the key leaves the set
+  and a waiter builds it itself.  Builders never run under ``_COND``,
+  so builds of different keys proceed concurrently, and the per-key
+  state is bounded by the builds in flight.
 
-- Builders materialize their own result (``localCheckpoint(eager=True)``
-  on the frame they return), so cache hits are scan-only; this means a
-  cache MISS runs Spark jobs at DataFrame-CONSTRUCTION time (the same
-  documented side effect the decontam eval-gram probe has had since
-  round 4).
-- Entries from other sessions (different applicationId) are evicted on
-  every access: their checkpoint RDDs died with the session, and
-  dropping the Python refs lets the ContextCleaner reclaim anything
-  still live.  A stopped-and-restarted session therefore never serves
-  stale frames.
-- The memo is LRU-bounded at ``_MAX_ENTRIES``; a long-lived session
-  sweeping many sf_dirs (the ADVICE r4 leak scenario for the old
-  ``_EVAL_GRAMS_CACHE``) tops out at 24 pinned stage frames instead of
-  growing without bound.  ``clear()`` drops everything explicitly.
-
-Standalone stage queries do NOT consult this cache: each direct call to
+Standalone stage queries do NOT consult the memo: each direct call to
 e.g. ``quality_gopher_flags`` recomputes, so bench per-query numbers
 keep measuring the operator, not the memo.
 """
@@ -37,108 +39,111 @@ import threading
 from collections import OrderedDict
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: OrderedDict[tuple[str, str, str], object] = OrderedDict()
 _MAX_ENTRIES = 24
+#: in-flight jobs per pool.  A handful is plenty; more just fight for
+#: executor slots.  Width 6 (r14): at 4, the 5-gate funnel and the
+#: 8-tail recall composition serialized their overflow specs behind the
+#: pool — measured interleaved ×4, corpus_funnel_report best
+#: 3.30 → 3.03 s and spread 3.3-4.6 → 3.0-3.2 at width 6.
+_WIDTH = 6
 
-#: bookkeeping lock (cache dict + key-lock table); never held while a
-#: builder runs, so concurrent builds of DIFFERENT keys proceed freely
-_LOCK = threading.Lock()
-#: per-key build locks: two threads asking for the SAME missing key run
-#: the builder once (the second blocks, then reads the memo)
-_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+#: guards _CACHE and _BUILDING; requesters of an in-flight key wait on it
+_COND = threading.Condition()
+#: keys whose builder is running now
+_BUILDING: set[tuple[str, str, str]] = set()
 
 
-def _lookup(key: tuple[str, str, str]) -> tuple[bool, object]:
-    with _LOCK:
-        app = key[0]
-        for k in [k for k in _CACHE if k[0] != app]:
-            del _CACHE[k]
-            _KEY_LOCKS.pop(k, None)
-        if key in _CACHE:
-            _CACHE.move_to_end(key)
-            return True, _CACHE[key]
-        return False, None
+def _overlap(spark: SparkSession, thunks: Sequence[Callable[[], object]]) -> list:
+    """Run independent thunks with their Spark jobs overlapped; results
+    come back in thunk order, and the first thunk error (in that order)
+    is raised verbatim."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)  # session form inherits tags
+    if not callable(wrap):  # classic mode returns the session itself
+        wrap = lambda f: f  # noqa: E731
+    with ThreadPoolExecutor(max_workers=min(len(thunks), _WIDTH)) as pool:
+        futures = [pool.submit(wrap(t)) for t in thunks]
+        return [f.result() for f in futures]
+
+
+def checkpoint(*dfs: DataFrame) -> list[DataFrame]:
+    """Eagerly localCheckpoint INDEPENDENT frames with their jobs
+    overlapped.  Callers must pass frames with no data dependency on
+    each other."""
+    if not dfs:
+        return []
+    return _overlap(
+        dfs[0].sparkSession,
+        [lambda d=d: d.localCheckpoint(eager=True) for d in dfs],
+    )
+
+
+def _cached(key: tuple[str, str, str]) -> tuple[bool, object]:
+    """(hit, value) for key; call with _COND held."""
+    for k in [k for k in _CACHE if k[0] != key[0]]:
+        del _CACHE[k]
+    if key in _CACHE:
+        _CACHE.move_to_end(key)
+        return True, _CACHE[key]
+    return False, None
 
 
 def get_or_build(
     spark: SparkSession, name: str, dataset_key: str, builder: Callable[[], object]
 ) -> object:
     """Return the memoized value for (current session, name, dataset_key),
-    building (and thereby materializing) it on first use."""
+    building (and thereby materializing) it on first use.  Concurrent
+    requesters of one missing key run its builder once."""
     key = (spark.sparkContext.applicationId, name, dataset_key)
-    hit, val = _lookup(key)
-    if hit:
-        return val
-    with _LOCK:
-        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:
-        hit, val = _lookup(key)  # built while we waited for the lock
-        if hit:
-            return val
+    with _COND:
+        while True:
+            hit, val = _cached(key)
+            if hit:
+                return val
+            if key not in _BUILDING:
+                break
+            _COND.wait()
+        _BUILDING.add(key)
+    built = False
+    try:
         val = builder()
-        with _LOCK:
-            _CACHE[key] = val
-            # key locks OUTLIVE LRU eviction (ADVICE r13): popping a
-            # lock another thread still waits on would let two builders
-            # run concurrently for one key after re-request.  Locks are
-            # dropped only by clear() and cross-session eviction (the
-            # old app's builders are gone with its JVM).
-            while len(_CACHE) > _MAX_ENTRIES:
-                _CACHE.popitem(last=False)
+        built = True
+    finally:
+        with _COND:
+            _BUILDING.discard(key)
+            if built:
+                _CACHE[key] = val
+                while len(_CACHE) > _MAX_ENTRIES:
+                    _CACHE.popitem(last=False)
+            _COND.notify_all()
     return val
 
 
 def build_many(
     spark: SparkSession,
     specs: Sequence[tuple[str, str, Callable[[], object]]],
-    max_workers: int = 6,
 ) -> list[object]:
     """get_or_build every (name, dataset_key, builder) spec, running the
-    cache MISSES concurrently from a small driver thread pool (guide
-    §2.6 — overlap independent jobs): each builder eager-materializes
-    its own frame, and Spark back-fills one stage's straggler tail with
-    the next stage's tasks instead of serializing whole jobs.  Results
-    come back in spec order; values are identical to sequential builds
-    (each stage is an independent pipeline — only the job overlap
-    changes).  A handful of in-flight jobs is plenty; more just fight
-    for executor slots.  Width 6 (r14): at 4, the 5-gate funnel and the
-    8-tail recall composition serialized their overflow specs behind
-    the pool — measured interleaved ×4, corpus_funnel_report best
-    3.30 → 3.03 s and spread 3.3-4.6 → 3.0-3.2 at width 6."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    missing = [
-        i
-        for i, (name, dkey, _) in enumerate(specs)
-        if not _lookup((spark.sparkContext.applicationId, name, dkey))[0]
-    ]
-    if len(missing) > 1:
-        wrap = inheritable_thread_target(spark)  # session form inherits tags
-        if not callable(wrap):  # classic mode returns the session itself
-            wrap = lambda f: f
-        with ThreadPoolExecutor(
-            max_workers=min(len(missing), max_workers)
-        ) as pool:
-            futures = [
-                pool.submit(
-                    wrap(
-                        lambda s=specs[i]: get_or_build(spark, s[0], s[1], s[2])
-                    )
-                )
-                for i in missing
-            ]
-            for f in futures:  # surface the first builder error verbatim
-                f.result()
+    cache MISSES through the one pool (each builder eager-materializes
+    its own frame).  Results come back in spec order."""
+    app = spark.sparkContext.applicationId
+    with _COND:
+        missing = [s for s in specs if not _cached((app, s[0], s[1]))[0]]
+    _overlap(spark, [lambda s=s: get_or_build(spark, *s) for s in missing])
     return [get_or_build(spark, n, d, b) for n, d, b in specs]
 
 
 def clear() -> None:
     """Drop every memoized stage frame (checkpoint RDDs are reclaimed by
-    the ContextCleaner once the refs drop)."""
-    with _LOCK:
+    the ContextCleaner once the refs drop).  Builds in flight still
+    store their result when they finish."""
+    with _COND:
         _CACHE.clear()
-        _KEY_LOCKS.clear()

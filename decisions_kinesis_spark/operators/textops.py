@@ -11,10 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
-    ensure_parallelism,
-)
+from decisions_kinesis_spark.functions.parallel import ensure_parallelism
+from decisions_kinesis_spark.operators import stage_cache
 from decisions_kinesis_spark.sources.tables import load_table
 
 _TOKS = r"filter(split(lower(text), '\\s+'), x -> x != '')"
@@ -457,7 +455,7 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(F.expr(_TOKS)).alias("term")
     ).localCheckpoint(eager=True)
-    return _bm25_topk(*checkpoint_parallel(*_lex_inputs(tok)))
+    return _bm25_topk(*stage_cache.checkpoint(*_lex_inputs(tok)))
 
 
 def _lex_inputs(tok: DataFrame):
@@ -563,7 +561,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inputs once, with their jobs overlapped (guide §2.4/§2.6).  All
     # three are bounded: tf/df_t by the query-term broadcast, dl one
     # row per doc.
-    tf, df_t, dl = checkpoint_parallel(*_lex_inputs(tok))
+    tf, df_t, dl = stage_cache.checkpoint(*_lex_inputs(tok))
     # n_docs for the tf-idf idf = docs with ≥1 token = dl's row count
     nd = dl.agg(F.count("*").alias("n_docs"))
     agg_b = (

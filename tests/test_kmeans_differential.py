@@ -219,3 +219,24 @@ def test_kmeans_structure_on_fixture(spark):
         r["cluster_id"] for r in rows if r["iter"] == _KM_ITERS
     }
     assert set(by_cluster) == final_clusters
+
+
+def test_kmeans_ch_index_second_construction_launches_no_job(spark, sf_dir):
+    """The checkpointed final centroids are memoized beside the loop
+    result: constructing ch_index again in one session runs no Spark
+    job (the first construction runs the loop and the checkpoint)."""
+    from decisions_kinesis_spark.operators.clustering import _KM_LOOP_CACHE
+
+    sc = spark.sparkContext
+    _KM_LOOP_CACHE.clear()
+    try:
+        jobs = []
+        for i in range(2):
+            sc.setJobGroup(f"ch-index-{i}", "ch_index construction")
+            embedding_kmeans_ch_index(spark, sf_dir)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"ch-index-{i}")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        _KM_LOOP_CACHE.clear()
+    assert jobs[0] > 0 and jobs[1] == 0, jobs
