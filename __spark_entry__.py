@@ -7,12 +7,13 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 _OPERATOR_MODULES = (
@@ -37,138 +38,16 @@ _OPERATOR_MODULES = (
     "probes",
 )
 
-# STANDING GATE POLICY (round 5+, VERDICT r4 next-round #1).  The
-# driver's correctness gate walks queries() in dict order and hard-caps
-# at 50 rows, so the order below decides which queries get a fresh
-# hard-signal row each round.  Instead of a hand-rotated tuple, the
-# window is COMPUTED at import time from tools/gate_state.json (per
-# query: the implementation fingerprint at its most recent driver-green
-# row, recorded by `python tools/gate_policy.py sync` at round start):
-#
-#   1. sentinels — stable cross-module regression canaries, every round;
-#   2. NEW queries (no driver row ever);
-#   3. CHANGED queries — current fingerprint (own module + imported
-#      operator modules + the non-operator core) differs from the one
-#      recorded at the query's last driver-green row, so post-window
-#      edits like r4's ann_cosine_topk norm rewrite are always re-gated;
-#   4. the rest, oldest-driver-row-first rotation.
-#
-# Missing/unreadable state degrades to the static fallback (sentinels +
-# registration order) — the entry point must never fail to import.
+# The driver walks queries() in dict order and gates a capped prefix of
+# it, so these cross-module regression canaries lead; every other query
+# follows in _OPERATOR_MODULES order.  Every query is checked locally
+# by tools/oracle_check.py.
 _SENTINELS = (
     "flagship_premium_filter",
     "q1_pricing_summary",
     "window_tumbling_hourly",
     "dedup_exact",
 )
-
-_GATE_STATE_PATH = "/root/repo/tools/gate_state.json"
-
-
-def _module_fingerprints() -> dict[str, str]:
-    """md5 per operator module source, plus 'core' = every non-operator
-    package file (sources/, functions/, streaming/, config, session) —
-    a core change invalidates every query's fingerprint."""
-    import hashlib
-    import os
-
-    root = "/root/repo/decisions_kinesis_spark"
-    fps: dict[str, str] = {}
-    core = hashlib.md5()
-    for dirpath, _dirnames, filenames in sorted(os.walk(root)):
-        for fn in sorted(filenames):
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            with open(path, "rb") as f:
-                data = f.read()
-            if os.path.basename(dirpath) == "operators":
-                fps[fn[:-3]] = hashlib.md5(data).hexdigest()
-            else:
-                core.update(path.encode())
-                core.update(data)
-    fps["core"] = core.hexdigest()
-    return fps
-
-
-def _query_fingerprints() -> dict[str, str]:
-    """Per-query fingerprint: own module + operator modules it imports
-    (scanned from source, e.g. corpus→textops, similarity→dedup) + core.
-    Module-level granularity is deliberately conservative: editing a
-    shared helper re-gates every query in the module."""
-    import hashlib
-    import os
-    import re
-
-    mod_fp = _module_fingerprints()
-    deps: dict[str, list[str]] = {}
-    for name in _OPERATOR_MODULES:
-        path = f"/root/repo/decisions_kinesis_spark/operators/{name}.py"
-        if not os.path.exists(path):
-            deps[name] = []
-            continue
-        with open(path) as f:
-            src = f.read()
-        found = re.findall(
-            r"operators\.(\w+) import|operators import (\w+)", src
-        )
-        deps[name] = sorted(
-            {a or b for a, b in found} - {name}
-        )
-    out: dict[str, str] = {}
-    for name in _OPERATOR_MODULES:
-        parts = [mod_fp.get("core", "")] + [
-            mod_fp.get(m, "") for m in [name] + deps.get(name, [])
-        ]
-        fp = hashlib.md5("|".join(parts).encode()).hexdigest()
-        try:
-            import importlib
-
-            m = importlib.import_module(
-                f"decisions_kinesis_spark.operators.{name}"
-            )
-        except ImportError:
-            continue
-        for qname in m.QUERIES:
-            out[qname] = fp
-    return out
-
-
-def _gate_order(registered: list[str]) -> list[str]:
-    """The gate window order per the standing policy (see comment above).
-    ``registered`` is registration (module) order, the within-group
-    tie-break so the order is deterministic."""
-    import json
-
-    try:
-        with open(_GATE_STATE_PATH) as f:
-            state = json.load(f)
-        fps = _query_fingerprints()
-    except Exception:  # noqa: BLE001 - degrade, never fail the driver
-        state, fps = {}, {}
-    idx = {q: i for i, q in enumerate(registered)}
-    sentinels = [q for q in _SENTINELS if q in idx]
-    new = [q for q in registered if q not in state and q not in sentinels]
-    changed = sorted(
-        (
-            q
-            for q in registered
-            if q in state
-            and q not in sentinels
-            and fps.get(q) is not None
-            and state[q].get("fp") != fps[q]
-        ),
-        # stalest driver row first: when the changed set overflows the
-        # driver's 50-slot cap, the queries with the OLDEST hard-signal
-        # row gate first and the freshest-verified ones rotate out
-        key=lambda q: (state.get(q, {}).get("round", 0), idx[q]),
-    )
-    taken = set(sentinels) | set(new) | set(changed)
-    rest = sorted(
-        (q for q in registered if q not in taken),
-        key=lambda q: (state.get(q, {}).get("round", 0), idx[q]),
-    )
-    return sentinels + new + changed + rest
 
 
 def _registries():
@@ -181,12 +60,13 @@ def _registries():
             m = importlib.import_module(f"decisions_kinesis_spark.operators.{name}")
         except ImportError:
             continue
+        dup = merged.keys() & m.QUERIES.keys()
+        if dup:
+            raise ValueError(f"{name} re-registers queries {sorted(dup)}")
         merged.update(m.QUERIES)
         oracles.update(m.ORACLES)
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for qname in _gate_order(list(merged)):
-        queries[qname] = merged.pop(qname)
-    queries.update(merged)  # defensive: anything the order missed
+    queries = {q: merged.pop(q) for q in _SENTINELS}
+    queries.update(merged)
     return queries, oracles
 
 

@@ -46,12 +46,6 @@ def get_session(
         .config("spark.sql.parquet.filterPushdown", "true")
         # let Python data sources (sources/pyds.py) receive pushFilters
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # Older fixture generations stored events.ts as TIMESTAMP(NANOS);
-        # Spark reads those as long-nanos with this flag, converted back
-        # to a timestamp in sources.tables.load_table.  Current fixtures
-        # use TIMESTAMP(MICROS, isAdjustedToUTC=false), which load_table
-        # normalizes from TimestampNTZ to the session timestamp type.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # Long many-query sessions (the 244-query bench/oracle sweeps)
         # age without these: even with the UI off, the app status

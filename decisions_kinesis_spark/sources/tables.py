@@ -36,44 +36,37 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def _key(cache: dict, spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """Cache key for the current session, after evicting the entries of
+    every other session: they pin frames of a stopped JVM context."""
+    app = spark.sparkContext.applicationId
+    for k in list(cache):
+        if k[0] != app:
+            cache.pop(k, None)
+    return (app, sf_dir, name)
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
     # The driver owns the SparkSession; pin UTC on EVERY call (cache hit
     # or miss) so timestamp values compare stably against the DuckDB
     # oracle even if intervening code changed the session timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = _key(_RELATION_CACHE, spark, sf_dir, name)
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
-    if name == "events":
-        # ts is parquet TIMESTAMP(NANOS): Spark has no nanosecond timestamp
-        # type, so read it as long-nanos and truncate to microseconds —
-        # exactly what DuckDB does when casting TIMESTAMP_NS → TIMESTAMP,
-        # keeping oracle comparisons exact.  The legacy conf is confined
-        # to this one read (restored after analysis) so unrelated parquet
-        # reads in the session keep normal timestamp decoding.
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            if dict(df.dtypes).get("ts") == "bigint":
-                # integer division: ns-since-epoch overflows double precision
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-                # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet comes out
-                # TimestampNTZ under inferTimestampNTZ; normalize to LTZ.
-                # The session tz is pinned UTC above, so the NTZ→LTZ cast
-                # reinterprets the naive value as UTC — the same instants
-                # DuckDB sees for its naive TIMESTAMP.  The cast target is
-                # the EXPLICIT TimestampType (not the "timestamp" alias,
-                # which resolves through spark.sql.timestampType and would
-                # silently no-op if a caller overrode that conf to NTZ).
-                df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
+        # events.ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet,
+        # which comes out TimestampNTZ under inferTimestampNTZ; normalize
+        # to LTZ.  The session tz is pinned UTC above, so the NTZ→LTZ
+        # cast reinterprets the naive value as UTC — the same instants
+        # DuckDB sees for its naive TIMESTAMP.  The cast target is the
+        # EXPLICIT TimestampType (not the "timestamp" alias, which
+        # resolves through spark.sql.timestampType and would silently
+        # no-op if a caller overrode that conf to NTZ).
+        df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
     _RELATION_CACHE[key] = df
     return df
 
@@ -87,7 +80,7 @@ _COUNT_CACHE: dict[tuple[str, str, str], int] = {}
 
 def table_count(spark: SparkSession, name: str, sf_dir: str | None = None) -> int:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = _key(_COUNT_CACHE, spark, sf_dir, name)
     n = _COUNT_CACHE.get(key)
     if n is None:
         n = load_table(spark, name, sf_dir).count()

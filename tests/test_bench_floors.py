@@ -10,10 +10,12 @@ cannot silently regress an earlier one.  No SparkSession needed.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _spec = importlib.util.spec_from_file_location(
-    "bench_mod", "/root/repo/bench.py"
+    "bench_mod", os.path.join(_REPO, "bench.py")
 )
 _bench = importlib.util.module_from_spec(_spec)
 sys.modules.setdefault("bench_mod", _bench)

@@ -18,13 +18,15 @@ ships ``decimal.Decimal`` objects.  These tests pin
 
 from __future__ import annotations
 
+import os
 import sys
 from decimal import Decimal
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from oracle_check import canon_duck, canon_spark, compare  # noqa: E402
 

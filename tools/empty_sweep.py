@@ -1,6 +1,6 @@
 """Degenerate-input robustness sweep: run every registered query
 against 0-row (or N-row) copies of all ten tables — schemas preserved
-byte-for-byte from a source SF dir, including the NANOS ``ts`` — and
+byte-for-byte from a source SF dir, including the naive ``ts`` — and
 report which queries crash instead of returning a well-defined result.
 
 Empty inputs are the realistic degenerate at scale: a filter that
@@ -22,13 +22,14 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def build_fixture(src: str, rows: int) -> str:
     import pyarrow.parquet as pq
 
-    dst = f"/root/repo/.degenerate_sf_{rows}"
+    dst = os.path.join(_REPO, f".degenerate_sf_{rows}")
     os.makedirs(dst, exist_ok=True)
     for f in sorted(os.listdir(src)):
         if not f.endswith(".parquet"):

@@ -28,9 +28,6 @@ def main() -> None:
         _HERE, "plans", os.environ.get("SPARK_GRAFT_PLANDIR", "r14")
     )
 
-    # bind the package to code_repo FIRST: __spark_entry__ hardcodes
-    # sys.path.insert(0, "/root/repo"), which would otherwise resolve
-    # the operator modules from the live repo even in a "before" dump
     import decisions_kinesis_spark  # noqa: F401
 
     assert decisions_kinesis_spark.__file__.startswith(code_repo), (

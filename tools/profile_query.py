@@ -12,6 +12,9 @@ Prints one line per query:
 
 Methodology follows the bench: memo caches cleared before every pass so
 the numbers measure operators, not memos; noop sink per guide §1.4.
+Jobs are counted by job-id range with the bench's ``JobLedger``
+(construction-time jobs from pool threads included), over the cold pass
+only, read right after it runs.
 """
 
 from __future__ import annotations
@@ -22,6 +25,47 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.layers import TRACE_CONF, JobLedger  # noqa: E402
+
+#: untimed warm-up at the smallest fixture (the bench protocol):
+#: JIT/codegen/Arrow/worker-pool costs stay out of the timed passes
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def _clear_memos() -> None:
+    from decisions_kinesis_spark.operators import stage_cache
+    from decisions_kinesis_spark.operators.clustering import _KM_LOOP_CACHE
+
+    stage_cache.clear()
+    _KM_LOOP_CACHE.clear()
+
+
+def _run(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """(build_s, exec_s) of one memo-cleared pass."""
+    _clear_memos()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
+
+
+def profile(spark, ledger: JobLedger, fn, sf_dir: str, repeat: int = 1) -> dict:
+    """One query's row: the cold pass's build/exec seconds and job
+    counts, then the best build+exec seconds of ``repeat`` warm passes."""
+    lo = ledger.mark()
+    build, cold = _run(spark, fn, sf_dir)
+    stats = ledger.stats(lo, ledger.mark())
+    warm = min(sum(_run(spark, fn, sf_dir)) for _ in range(repeat))
+    return {
+        "build": round(build, 3),
+        "cold": round(cold, 3),
+        "warm": round(warm, 3),
+        "jobs": stats.jobs,
+        "stages": stats.stages,
+        "tasks": stats.tasks,
+    }
 
 
 def main() -> None:
@@ -38,26 +82,15 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from decisions_kinesis_spark.session import get_session
 
-    spark = get_session(app_name="dks-profile")
-    sc = spark.sparkContext
+    spark = get_session(app_name="dks-profile", extra_conf=TRACE_CONF)
     spark.range(1000).selectExpr("sum(id)").collect()
+    ledger = JobLedger(spark)
 
     qs = entry_mod.queries()
     names = list(qs) if do_all else args
 
-    def _clear_memos() -> None:
-        from decisions_kinesis_spark.operators import stage_cache
-        from decisions_kinesis_spark.operators.clustering import _KM_LOOP_CACHE
-
-        stage_cache.clear()
-        _KM_LOOP_CACHE.clear()
-
-    tracker = sc.statusTracker()
-
     # stream-bandwidth gauge (bench.py's certifying probe): prints with
     # every row so stall-poisoned measurements are visible
-    import array as _array
-
     _n = 64 * 1024 * 1024
     _src = bytes(_n)
     _dst = memoryview(bytearray(_n))
@@ -69,25 +102,6 @@ def main() -> None:
             _dst[:] = _src
         return round(3 * 2 * _n / (time.perf_counter() - t0) / 1e9, 1)
 
-    # untimed warm-up at the smallest fixture (the bench protocol):
-    # JIT/codegen/Arrow/worker-pool costs stay out of the timed passes
-    warm_dir = "/root/testdata/sf0.001"
-
-    def _job_info(group):
-        ids = tracker.getJobIdsForGroup(group)
-        stages = 0
-        tasks = 0
-        for jid in ids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            stages += len(ji.stageIds)
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    tasks += si.numTasks
-        return len(ids), stages, tasks
-
     print(
         f"{'query':44s} {'build':>7} {'cold':>7} {'warm':>7}"
         f" {'jobs':>5} {'stage':>5} {'tasks':>6}"
@@ -96,55 +110,23 @@ def main() -> None:
     for name in names:
         fn = qs[name]
         try:
-            if os.path.isdir(warm_dir) and os.path.abspath(
-                warm_dir
+            if os.path.isdir(WARM_DIR) and os.path.abspath(
+                WARM_DIR
             ) != os.path.abspath(sf_dir):
                 try:
-                    _clear_memos()
-                    fn(spark, warm_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
+                    _run(spark, fn, WARM_DIR)
                 except Exception:  # noqa: BLE001 - warm-up must never sink
                     pass
-            # --- build + cold exec (separate job group so counts are ours)
-            _clear_memos()
-            sc.setJobGroup(f"prof:{name}", f"{name}:cold")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t_build = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            t_cold = time.perf_counter() - t0
-            # --- warm pass with job counting (fresh group id per pass)
-            best_warm = None
-            for _ in range(repeat):
-                _clear_memos()
-                sc.setJobGroup("prof2", f"{name}:warm")
-                sc.setJobDescription(name)
-                t0 = time.perf_counter()
-                df2 = fn(spark, sf_dir)
-                df2.write.format("noop").mode("overwrite").save()
-                w = time.perf_counter() - t0
-                if best_warm is None or w < best_warm:
-                    best_warm = w
-            # job counts from the COLD pass group (includes build-time jobs)
-            jobs, stages, tasks = _job_info(f"prof:{name}")
+            row = profile(spark, ledger, fn, sf_dir, repeat)
         except Exception as exc:  # noqa: BLE001
             print(f"{name:44s} ERROR {type(exc).__name__}: {exc}", flush=True)
             continue
         print(
-            f"{name:44s} {t_build:7.3f} {t_cold:7.3f} {best_warm:7.3f}"
-            f" {jobs:5d} {stages:5d} {tasks:6d}  bw={_bw()}",
+            f"{name:44s} {row['build']:7.3f} {row['cold']:7.3f} {row['warm']:7.3f}"
+            f" {row['jobs']:5d} {row['stages']:5d} {row['tasks']:6d}  bw={_bw()}",
             flush=True,
         )
-        results[name] = {
-            "build": round(t_build, 3),
-            "cold": round(t_cold, 3),
-            "warm": round(best_warm, 3),
-            "jobs": jobs,
-            "stages": stages,
-            "tasks": tasks,
-        }
+        results[name] = row
     with open("/tmp/profile_results.json", "w") as f:
         json.dump(results, f, indent=1)
 

@@ -32,12 +32,13 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-OUT = "/root/repo/.scale_smoke"  # per-K subdir; reused across runs
+OUT = os.path.join(_REPO, ".scale_smoke")  # per-K subdir; reused across runs
 
 DEFAULT_OPS = (
     "quality_gopher_flags",
@@ -140,8 +141,8 @@ def build_replica(spark, k: int) -> str:
         .repartition(32)
         .write.parquet(f"{out}/lineitem.parquet")
     )
-    # events.parquet is TIMESTAMP(NANOS): go through load_table, which
-    # owns the legacy-conf dance and lands ts at micros
+    # go through load_table, which lands the naive parquet ts as the
+    # session (UTC) timestamp type
     from decisions_kinesis_spark.sources.tables import load_table
 
     ev = load_table(spark, "events", BASE)
